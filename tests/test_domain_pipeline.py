@@ -161,7 +161,7 @@ def test_new_channels_anti_join(spark, bronze_day_path):
         "id string, channel_name string, country string, creation_date timestamp_ntz, "
         "made_for_kids boolean, subscribers_count long, views_count long, videos_count long, keywords string",
     )
-    out = new_channels(silver, known, fetched)
+    out = new_channels(new_channel_ids(silver, known), fetched)
     rows = {r["id"]: r for r in out.collect()}
     assert set(rows) == {f"ch-DE-{i}" for i in range(4)}  # known id filtered out
     assert rows["ch-DE-0"]["country"] == "Unkown"  # sic default (ing:101)

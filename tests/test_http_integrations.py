@@ -101,7 +101,7 @@ def api_server():
     srv.shutdown()
 
 
-def test_rest_fetcher_trending_feeds_ingestion(spark, api_server):
+def test_rest_fetcher_trending_feeds_ingestion(spark, api_server, tmp_path):
     """The REAL urllib client fetches per-region payloads and the bronze
     frame built from them demultiplexes identically to the recorded
     day-file path."""
@@ -114,7 +114,9 @@ def test_rest_fetcher_trending_feeds_ingestion(spark, api_server):
     )
 
     f = RestApiFetcher("test-key", base_url=api_server)
-    bronze = bronze_from_fetcher(spark, f, ["QA", "US", "DE", "XX"])
+    bronze = bronze_from_fetcher(
+        spark, f, ["QA", "US", "DE", "XX"], str(tmp_path / "day.json")
+    )
     items = region_items(bronze)
     assert items.count() == 60  # XX absent -> P7 guard drops it
     assert {r.region for r in bronze.select("region").collect()} == {

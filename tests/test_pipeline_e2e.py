@@ -6,6 +6,8 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
+
 from tests.conftest import make_day_json
 from youtube_trending_data_pipeline_spark.pipeline import (
     PipelineConfig,
@@ -13,6 +15,7 @@ from youtube_trending_data_pipeline_spark.pipeline import (
     run_daily_ingestion,
     run_weekly_report,
 )
+from youtube_trending_data_pipeline_spark.sources.fetchers import DayFileFetcher
 
 END = dt.date(2025, 10, 12)
 
@@ -137,8 +140,16 @@ def test_ingestion_through_fetcher_seam(spark, tmp_path):
         ]
         assert sum(sizes) == 12
         assert max(sizes) <= RecordingFetcher.BATCH
-        # raw day persisted through the seam (S3-parity bronze sink)
-        assert os.path.isdir(f"{cfg.bronze_dir}/{day.isoformat()}.json")
+        # raw day landed through the seam as ONE reference-shaped file
+        # (S3-parity bronze sink) that the replay fetcher loads
+        landed = f"{cfg.bronze_dir}/{day.isoformat()}.json"
+        assert os.path.isfile(landed)
+        with open(landed) as fh:
+            assert set(json.load(fh)) == {"QA", "US", "DE"}
+        replay = DayFileFetcher(landed)
+        assert sum(
+            len(replay.fetch_trending(r)["items"]) for r in ("QA", "US", "DE")
+        ) == 60
 
         # day 2, same channels: the anti-join finds nothing new -> no fetch
         for p in glob.glob(f"{calls_dir}/*"):
@@ -151,6 +162,66 @@ def test_ingestion_through_fetcher_seam(spark, tmp_path):
         assert spark.read.parquet(cfg.channels_dir).count() == 12
     finally:
         fmod.channels_from_fetcher = orig
+
+
+def _cfg(tmp_path):
+    return PipelineConfig(
+        bronze_dir=str(tmp_path / "bronze"),
+        videos_dir=str(tmp_path / "videos"),
+        channels_dir=str(tmp_path / "channels"),
+        insights_dir=str(tmp_path / "insights"),
+    )
+
+
+def test_replay_of_landed_day_file(spark, tmp_path):
+    """Replaying a date from the day file its own ingestion landed at
+    ``{bronze_dir}/{date}.json``: the landed day is a file, not a Spark
+    output directory, so the replay fetcher opens it, the sink replaces
+    it in place, and the date's partition is rebuilt with the same rows.
+    The file stays an ordinary one: edited by hand, it still replays."""
+    cfg = _cfg(tmp_path)
+    day = dt.date(2025, 10, 6)
+    src = tmp_path / "fetched.json"
+    src.write_text(json.dumps(make_day_json()))
+    run_daily_ingestion(spark, cfg, day, fetcher=DayFileFetcher(str(src)))
+
+    landed = f"{cfg.bronze_dir}/{day.isoformat()}.json"
+    silver = run_daily_ingestion(
+        spark, cfg, day, fetcher=DayFileFetcher(landed)
+    )
+    assert silver.count() == 60
+    assert spark.read.parquet(cfg.videos_dir).count() == 60
+    with open(landed) as fh:
+        assert json.load(fh) == make_day_json()
+
+    # a hand-corrected landed file replays from the bronze directory: no
+    # stale checksum sidecar makes Spark reject the edited bytes
+    with open(landed, "w") as fh:
+        json.dump(make_day_json(items_per_region=10), fh)
+    assert run_daily_ingestion(spark, cfg, day).count() == 30
+
+
+def test_malformed_fetched_payload_aborts_the_day(spark, tmp_path):
+    """The landed day is scanned FAILFAST: an item whose ``snippet`` is a
+    string does not fit VIDEO_LIST_RESPONSE, so ingestion raises instead
+    of nulling the day object (which would silently drop every region),
+    and no silver partition is written for the date."""
+    from py4j.protocol import Py4JJavaError
+
+    cfg = _cfg(tmp_path)
+    good, bad = dt.date(2025, 10, 6), dt.date(2025, 10, 7)
+    src = tmp_path / "fetched.json"
+    src.write_text(json.dumps(make_day_json()))
+    run_daily_ingestion(spark, cfg, good, fetcher=DayFileFetcher(str(src)))
+
+    payload = make_day_json()
+    payload["US"]["items"][3]["snippet"] = "not a snippet"
+    src.write_text(json.dumps(payload))
+    with pytest.raises(Py4JJavaError, match="snippet"):
+        run_daily_ingestion(spark, cfg, bad, fetcher=DayFileFetcher(str(src)))
+    videos = spark.read.parquet(cfg.videos_dir)
+    assert videos.where(f"date = '{bad}'").count() == 0
+    assert videos.count() == 60
 
 
 def test_weekly_report_through_sender_seam(spark, tmp_path):

@@ -724,6 +724,24 @@ def test_list_matrix_rejects_ragged_and_empty_groups():
     assert (M == np.array([[1, 2, 3], [4, 5, 6]])).all()
 
 
+def test_list_matrix_rejects_null_elements():
+    """A NULL element inside a uniform-length list must fail loudly: the
+    int64 cast of the flattened values would otherwise read it as
+    INT64_MIN ([[1, None], [3, 4]] -> [[1, -2^63], [3, 4]])."""
+    import pyarrow as pa
+    import pytest
+
+    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
+        _list_matrix,
+    )
+
+    holed = pa.chunked_array(
+        [pa.array([[1, None], [3, 4]], pa.list_(pa.int64()))]
+    )
+    with pytest.raises(ValueError, match="NULL elements"):
+        _list_matrix(holed, 2)
+
+
 def test_list_offsets_guard_rejects_int32_overflow():
     """r14 (ADVICE r13): replicated-list offsets must raise a
     descriptive error instead of wrapping int32 into negative offsets
@@ -740,3 +758,22 @@ def test_list_offsets_guard_rejects_int32_overflow():
     assert (off == np.array([0, 4, 8, 12], np.int32)).all()
     with pytest.raises(ValueError, match="2\\^31"):
         _list_offsets_i32((1 << 31) // 64 + 1, 64)
+
+
+def test_list_offsets_stop_past_int32_still_fits():
+    """At the boundary the last offset fits int32 while the arange stop
+    (total + dim) does not: the offsets must still come out exact, and one
+    more row must reach the descriptive guard, not a numpy overflow."""
+    import numpy as np
+    import pytest
+
+    from youtube_trending_data_pipeline_spark.operators.intlinalg import (
+        _list_offsets_i32,
+    )
+
+    dim = (1 << 30) + 5
+    off = _list_offsets_i32(1, dim)
+    assert off.dtype == np.int32
+    assert off.tolist() == [0, dim]
+    with pytest.raises(ValueError, match="2\\^31"):
+        _list_offsets_i32(2, dim)

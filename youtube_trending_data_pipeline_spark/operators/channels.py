@@ -48,10 +48,12 @@ def apply_channel_defaults(fetched: DataFrame) -> DataFrame:
     )
 
 
-def new_channels(videos: DataFrame, channels: DataFrame, fetched: DataFrame) -> DataFrame:
-    """Rows of ``fetched`` channel metadata restricted to genuinely-new ids,
-    with the reference's missing-field defaults applied (P2, ing:99-107)."""
-    ids = new_channel_ids(videos, channels)
+def new_channels(ids: DataFrame, fetched: DataFrame) -> DataFrame:
+    """Rows of ``fetched`` channel metadata restricted to the genuinely-new
+    ``ids`` (the :func:`new_channel_ids` frame), with the reference's
+    missing-field defaults applied (P2, ing:99-107). Taking the id frame
+    instead of recomputing the anti-join lets the caller materialize it
+    once for the emptiness check, the fetch and this filter."""
     return apply_channel_defaults(
         fetched.join(ids, fetched.id == ids.channel_id, "left_semi")
     ).dropDuplicates(["id"])

@@ -33,27 +33,31 @@ def _list_matrix(col, n_rows):
     the flat reshape would silently misalign a ragged group whose
     total element count happens to divide n_rows (the pandas
     np.array(list(...)) path failed loudly as an object array), and an
-    all-empty group would raise an opaque reshape error."""
+    all-empty group would raise an opaque reshape error. A NULL element
+    inside an otherwise uniform list fails the same way: the int64 cast
+    would turn it into INT64_MIN and silently corrupt every dot product
+    it enters."""
     import numpy as np
 
     arr = col.combine_chunks()
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
+    values = arr.flatten()
+    flat = values.to_numpy(zero_copy_only=False)
     if n_rows == 0:
-        return flat.reshape(0, 0)
+        return flat.astype(np.int64, copy=False).reshape(0, 0)
     lengths = arr.value_lengths().fill_null(0).to_numpy(
         zero_copy_only=False
     )
     lo, hi = int(lengths.min()), int(lengths.max())
-    if lo != hi or hi == 0:
+    if lo != hi or hi == 0 or values.null_count:
         raise ValueError(
-            "vector group is ragged or empty: list lengths span "
-            f"[{lo}, {hi}] over {n_rows} rows — every vector must "
-            "share one nonzero dimension (NULL/short/empty vectors "
-            "must be filtered or padded upstream)"
+            "vector group is ragged or empty, or has NULL elements: "
+            f"list lengths span [{lo}, {hi}] over {n_rows} rows, "
+            f"{values.null_count} NULL elements — every vector must "
+            "share one nonzero dimension with no NULL element "
+            "(NULL/short/empty vectors must be filtered or padded "
+            "upstream)"
         )
-    return flat.reshape(n_rows, hi)
+    return flat.astype(np.int64, copy=False).reshape(n_rows, hi)
 
 
 def _list_offsets_i32(n_rows, dim):
@@ -74,7 +78,9 @@ def _list_offsets_i32(n_rows, dim):
             "so groups shrink (each group's output must stay under "
             "2^31 list elements)"
         )
-    return np.arange(0, (n_rows + 1) * dim, dim, dtype=np.int32)
+    # built in int64 and narrowed: the stop value total + dim may itself
+    # exceed int32 while every offset still fits
+    return np.arange(0, total + dim, dim, dtype=np.int64).astype(np.int32)
 
 # Masks self-pairs so they sort LAST under (dot DESC, id ASC): smaller
 # than any legitimate dot (those are >= -6.4e9) yet small enough in

@@ -28,6 +28,11 @@ from youtube_trending_data_pipeline_spark.operators.flatten import flatten_video
 from youtube_trending_data_pipeline_spark.operators.insights import daily_insights
 from youtube_trending_data_pipeline_spark.operators.weekly import weekly_insights
 from youtube_trending_data_pipeline_spark.report.html import render_weekly_html
+from youtube_trending_data_pipeline_spark.schemas import (
+    CHANNELS,
+    DAILY_INSIGHTS,
+    DAILY_TRENDING_VIDEOS,
+)
 from youtube_trending_data_pipeline_spark.sources.bronze import (
     read_bronze_day,
     region_items,
@@ -66,54 +71,52 @@ def run_daily_ingestion(
 
     ``fetcher`` (sources.fetchers.TrendingFetcher) is the S1/S2 seam: when
     given, region payloads come from ``fetcher.fetch_trending`` — the
-    reference's REST pull (ing:76-82) — and are persisted as the raw
-    bronze day (ing:83-91) before flattening; new-channel metadata comes
-    from ``fetcher.fetch_channels`` over the anti-joined id set (ing:94-97)
+    reference's REST pull (ing:76-82) — and land as the raw bronze day,
+    ONE JSON file at ``{bronze_dir}/{date}.json`` (ing:83-91) that Spark
+    then scans; a later run of the date can replay that file through a
+    DayFileFetcher. New-channel metadata comes from
+    ``fetcher.fetch_channels`` over the anti-joined id set (ing:94-97)
     unless an explicit ``fetched_channels`` frame overrides it. Without a
     fetcher, the bronze day-file is read from ``cfg.bronze_dir`` directly.
-    """
-    from youtube_trending_data_pipeline_spark.schemas import CHANNELS
 
+    The known channels are read once, and the new-id frame is
+    materialized once (``localCheckpoint``) and shared by the emptiness
+    check, the executor-side fetch and the final filter; the ids stay in
+    executors and never land on the driver.
+    """
     day_path = f"{cfg.bronze_dir}/{run_date.isoformat()}.json"
     if fetcher is not None:
-        from youtube_trending_data_pipeline_spark.sources.bronze import (
-            write_bronze_day,
-        )
         from youtube_trending_data_pipeline_spark.sources.fetchers import (
             bronze_from_fetcher,
         )
 
-        bronze = bronze_from_fetcher(spark, fetcher, cfg.regions)
-        # raw S3-parity sink (ing:83-91), in the replayable day-file shape
-        write_bronze_day(bronze, day_path, cfg.regions)
+        bronze = bronze_from_fetcher(spark, fetcher, cfg.regions, day_path)
     else:
         bronze = read_bronze_day(spark, day_path, cfg.regions)
     silver = flatten_videos(region_items(bronze), run_date)
     overwrite_date_partition(silver, cfg.videos_dir)
-    if fetched_channels is None and fetcher is not None:
-        from youtube_trending_data_pipeline_spark.sources.fetchers import (
-            channels_from_fetcher,
-        )
-
+    if fetcher is not None or fetched_channels is not None:
         try:
-            known = read_table(spark, cfg.channels_dir)
+            known = read_table(spark, cfg.channels_dir, CHANNELS)
         except AnalysisException:  # first run: channels table doesn't exist yet
             known = spark.createDataFrame([], CHANNELS)
-        # the metadata fetch runs executor-side over the anti-joined id
-        # frame in bounded batches (the reference loops the ids on the
-        # driver, ing:135-138 — unbounded there on a first-run backfill;
-        # here no id list ever lands on the driver)
-        ids_df = new_channel_ids(silver, known)
-        if not ids_df.isEmpty():
-            fetched_channels = channels_from_fetcher(ids_df, fetcher)
-    if fetched_channels is not None:
-        try:
-            known = read_table(spark, cfg.channels_dir)
-        except AnalysisException:  # path-not-found only; real failures raise
-            known = fetched_channels.limit(0)
-        fresh = new_channels(silver, known, fetched_channels)
-        fresh.write.mode("append").parquet(cfg.channels_dir)
-    return spark.read.parquet(cfg.videos_dir).where(f"date = '{run_date}'")
+        # one materialization of the anti-join (the reference loops the
+        # ids on the driver, ing:135-138 — unbounded there on a first-run
+        # backfill; here no id list ever lands on the driver)
+        ids = new_channel_ids(silver, known).localCheckpoint()
+        if fetched_channels is None and not ids.isEmpty():
+            from youtube_trending_data_pipeline_spark.sources.fetchers import (
+                channels_from_fetcher,
+            )
+
+            # executor-side metadata fetch in bounded batches
+            fetched_channels = channels_from_fetcher(ids, fetcher)
+        if fetched_channels is not None:
+            fresh = new_channels(ids, fetched_channels)
+            fresh.write.mode("append").parquet(cfg.channels_dir)
+    return read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS).where(
+        f"date = '{run_date}'"
+    )
 
 
 def run_backfill_ingestion(
@@ -149,7 +152,7 @@ def run_backfill_ingestion(
     )
     silver = flatten_videos(items, F.col("file_date"))
     overwrite_date_partition(silver, cfg.videos_dir)
-    return spark.read.parquet(cfg.videos_dir)
+    return read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS)
 
 
 def run_backfill_aggregates(
@@ -159,20 +162,24 @@ def run_backfill_aggregates(
     groups by (region, date), so the multi-year rollup is the same
     operator over every date partition at once — one partial-aggregated
     shuffle on the (region, date) grain instead of one job per day."""
-    videos = read_table(spark, cfg.videos_dir)
+    videos = read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS)
     gold = daily_insights(videos)
     overwrite_date_partition(gold, cfg.insights_dir)
-    return spark.read.parquet(cfg.insights_dir)
+    return read_table(spark, cfg.insights_dir, DAILY_INSIGHTS)
 
 
 def run_daily_aggregates(
     spark: SparkSession, cfg: PipelineConfig, run_date: dt.date
 ) -> DataFrame:
     """silver videos (one date partition) -> gold ``daily_insights``."""
-    videos = read_table(spark, cfg.videos_dir).where(f"date = '{run_date}'")
+    videos = read_table(spark, cfg.videos_dir, DAILY_TRENDING_VIDEOS).where(
+        f"date = '{run_date}'"
+    )
     gold = daily_insights(videos)
     overwrite_date_partition(gold, cfg.insights_dir)
-    return spark.read.parquet(cfg.insights_dir).where(f"date = '{run_date}'")
+    return read_table(spark, cfg.insights_dir, DAILY_INSIGHTS).where(
+        f"date = '{run_date}'"
+    )
 
 
 def run_weekly_report(
@@ -189,7 +196,7 @@ def run_weekly_report(
     (weekly_report.py:90-109) — e-mail, file audit trail, or anything else
     implementing ``send``. Rendering is unchanged either way.
     """
-    insights = read_table(spark, cfg.insights_dir)
+    insights = read_table(spark, cfg.insights_dir, DAILY_INSIGHTS)
     report = weekly_insights(insights, end_date, formatted=True)
     html = render_weekly_html(report)
     if sender is not None:

@@ -132,7 +132,12 @@ def write_bronze_day(
     region code -> response (assets/2025-10-06.json) — so the sink's
     output is readable by :func:`read_bronze_day`: (region, response)
     rows pivot to one wide row whose columns are the region codes.
-    Passing ``regions`` skips the tiny distinct-scan pivot inference."""
+    Passing ``regions`` skips the tiny distinct-scan pivot inference.
+
+    This sink is for bronze frames already built in Spark, and ``path``
+    becomes a Spark output directory holding one part-file. Fetched days
+    do not come through here: sources.fetchers.bronze_from_fetcher lands
+    them as one plain file at the day path."""
     if regions is None:
         regions = sorted(
             r["region"] for r in bronze.select("region").distinct().collect()

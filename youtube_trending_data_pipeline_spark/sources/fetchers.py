@@ -10,6 +10,12 @@ fixtures. The default implementation replays a recorded day-file — the
 same JSON shape the reference persists to S3 (ing:83-91) — which is also
 exactly how a backfill over archived raw days runs at scale.
 
+``bronze_from_fetcher`` lands each fetched day once, as that same
+one-file JSON day object, and Spark reads the rows back from the file; the
+new-channel ids go to ``fetch_channels`` in executor tasks
+(``channels_from_fetcher``), so neither the day's rows nor the id list
+pass through the driver as Python objects.
+
 A production REST implementation (HTTP client + API key + pagination)
 implements the same two methods; nothing else in the pipeline changes.
 """
@@ -21,10 +27,10 @@ import json
 from collections.abc import Sequence
 from typing import Protocol
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
 
-from youtube_trending_data_pipeline_spark.schemas import VIDEO_LIST_RESPONSE
+from youtube_trending_data_pipeline_spark.sources.bronze import read_bronze_day
 
 
 class TrendingFetcher(Protocol):
@@ -112,27 +118,46 @@ def channels_from_fetcher(
 
 
 def bronze_from_fetcher(
-    spark: SparkSession, fetcher: TrendingFetcher, regions: Sequence[str]
+    spark: SparkSession,
+    fetcher: TrendingFetcher,
+    regions: Sequence[str],
+    path: str,
 ) -> DataFrame:
-    """(region, response) bronze frame via the fetcher seam — the exact
-    output shape of sources.bronze.read_bronze_day, so everything
-    downstream (region_items -> flatten_videos -> sinks) is identical.
+    """Land the fetched day at ``path`` and return its (region, response)
+    bronze frame — the exact output of sources.bronze.read_bronze_day, so
+    everything downstream (region_items -> flatten_videos -> sinks) is
+    identical to the replay path.
 
-    The fetch itself is a driver-side loop over ~hundreds of regions max
-    (the reference serves 3) — the heavy lifting starts after the payloads
-    enter Spark as rows."""
-    schema = StructType(
-        [
-            StructField("region", StringType()),
-            StructField("response", VIDEO_LIST_RESPONSE),
-        ]
-    )
-    rows = []
+    The fetch is a driver-side loop over ~hundreds of regions max (the
+    reference serves 3). The payloads become ONE JSON object mapping
+    region -> response, written as ONE file through the Hadoop FileSystem
+    API (``file://``, ``s3a://`` and ``gs://`` alike) — the reference's
+    raw sink shape (ing:83-91), replayable by DayFileFetcher and the
+    backfill's read_bronze_days. Whatever already sits at ``path`` is
+    replaced first, a directory included. The frame is then a JVM-only
+    scan of that file with the explicit bronze schema: the rows never
+    cross back through Python workers. The scan is FAILFAST, so a payload
+    that does not fit VIDEO_LIST_RESPONSE aborts the day instead of
+    silently nulling it."""
+    day = {}
     for region in regions:
         payload = fetcher.fetch_trending(region)
         if payload is not None:  # P7 key-presence guard
-            rows.append((region, payload))
-    return spark.createDataFrame(rows, schema)
+            day[region] = payload
+    sc = spark.sparkContext
+    target = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = target.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs.delete(target, True)
+    if is_instance_of(sc._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+        # local disk: no .crc sidecar, so a replaced or hand-edited day
+        # file never fails a checksum on a later Spark read
+        fs = fs.getRawFileSystem()
+    out = fs.create(target, True)
+    try:
+        out.write(bytearray(json.dumps(day).encode("utf-8")))
+    finally:
+        out.close()
+    return read_bronze_day(spark, path, list(regions), strict=True)
 
 
 class RestApiFetcher:

@@ -26,10 +26,18 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_table(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """Scan a pipeline table with its declared schema (schemas.py).
+
+    The declared schema replaces Parquet schema inference, which costs a
+    footer-reading Spark job per read; building the frame lists files on
+    the driver only. Partition columns come last, as inference orders
+    them. A missing ``path`` still raises AnalysisException (the
+    first-run branch of run_daily_ingestion relies on it)."""
+    return spark.read.schema(schema).parquet(path)
 
 
 def append_partitioned(df: DataFrame, path: str, partition_col: str = "date") -> None:
